@@ -1,6 +1,7 @@
 """Deduplication operators for the LLM-data-pipeline surface.
 
-Four tiers, all distributed (no driver-side loops, no collect):
+Four pair-finding tiers, all distributed (no driver-side loops, no
+collect):
 - exact_dedup         : md5-fingerprint groupBy — one shuffle on the hash.
 - ngram_jaccard_pairs : word-set Jaccard via inverted-index self-join —
                         shuffle on token, then on pair; fully SQL-expressible
@@ -19,6 +20,11 @@ passing ``portable=True`` switches to a 60-bit md5-derived hash
 oracle-checkable. The portable hash costs one md5 per (shingle, family
 member) instead of two xxhash64 per shingle — use it for verification, the
 default for production throughput.
+
+``connected_components`` turns the pairs into duplicate clusters. It is
+the one operator here that collects: a pair list at or under
+``tuning.CC_DRIVER_MAX_PAIRS`` is finished by union-find on the driver,
+and only larger graphs run the distributed min-label loop.
 """
 
 from __future__ import annotations
@@ -102,7 +108,7 @@ def _truncate_lineage(
     return out, handle
 
 
-def _enter_loop_session(src: DataFrame, tag: str) -> tuple[SparkSession, DataFrame, str]:
+def _enter_loop_session(src: DataFrame) -> tuple[DataFrame, str]:
     """Move ``src`` into a FRESH session (shared SparkContext, shared cache
     and checkpoint state, independent runtime conf) and disable AQE there.
 
@@ -111,8 +117,8 @@ def _enter_loop_session(src: DataFrame, tag: str) -> tuple[SparkSession, DataFra
     wall-clock at sf0.1). Flipping ``spark.sql.adaptive.enabled`` on the
     CALLER's session would affect every concurrent query on a shared
     session — scoping the toggle to a private session keeps the loop fast
-    without touching anyone else's plans. Returns (loop_session,
-    src-rebound-into-it, global-temp-view-name to drop on exit).
+    without touching anyone else's plans. Returns (src rebound into the
+    loop session, global-temp-view name to drop on exit).
     """
     from gmall_flink_yb_spark.sources.readers import _ensure_read_confs
 
@@ -122,9 +128,9 @@ def _enter_loop_session(src: DataFrame, tag: str) -> tuple[SparkSession, DataFra
     # if the cache were ever evicted, a re-scan from the loop session must
     # read parquet with the same timestamp confs as the caller
     _ensure_read_confs(loop)
-    name = f"_loop_{tag}_{uuid.uuid4().hex}"
+    name = f"_loop_{uuid.uuid4().hex}"
     src.createOrReplaceGlobalTempView(name)
-    return loop, loop.table(f"global_temp.{name}"), name
+    return loop.table(f"global_temp.{name}"), name
 
 
 def _exit_loop_session(result: DataFrame, caller: SparkSession) -> DataFrame:
@@ -433,12 +439,17 @@ def jaccard_prefix_pairs(
 
     probe_t = threading.Thread(target=_probe_max_len, daemon=True)
     probe_t.start()
-    # narrow form: candidates group by token, verification by doc_id —
-    # neither consumes a doc_id pre-partitioning (see shingle_rows_narrow)
-    toks = shingle_rows_narrow(df, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cand = _jaccard_prefix_candidates(toks, threshold)
+    # joined even if plan building raises: its job must not outlive us
+    try:
+        # narrow form: candidates group by token, verification by doc_id
+        # — neither consumes a doc_id pre-partitioning (see
+        # shingle_rows_narrow)
+        toks = shingle_rows_narrow(df, id_col, text_col, n).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        cand = _jaccard_prefix_candidates(toks, threshold)
+    finally:
+        probe_t.join()
     # verification via materialized shingle SETS + array_intersect, not a
     # row-level join: the row form expanded every candidate to |A| rows,
     # joined, and re-aggregated (two shuffles of candidate x shingle
@@ -476,7 +487,6 @@ def jaccard_prefix_pairs(
     # In the no-mega-doc case the verification plan is byte-identical to
     # the uncapped r4 form (docsets straight off ``toks``, no cap filter,
     # no union, no extra jobs).
-    probe_t.join()
     if "error" in probe_out:
         raise probe_out["error"]
     max_len = probe_out["max_len"]
@@ -1189,21 +1199,106 @@ def connected_components(
     PAIRS into duplicate CLUSTERS (the step a curation pipeline actually
     needs: keep one doc per component, not per pair).
 
-    Iterative min-label propagation: every node starts labeled with itself;
-    each round every node adopts the minimum label in its closed
-    neighborhood; stop when no label changes. Rounds = graph diameter,
-    which for near-dup graphs is tiny (dup clusters are cliques or short
-    chains). Each round is exactly TWO shuffles — one partition-aligned
-    join (edge contributions) and one groupBy (min over the closed
-    neighborhood, with each node's own label carried through the same
-    aggregate so no join-back is needed) — and ONE action: the convergence
-    counter is a sum(_changed) aggregate over the same persisted frame
-    that carries the next round's labels, so the action both materializes
-    every partition of the cache (keeping recompute lineage O(1) deep) and
-    answers "converged?" — no separate probe job, no collect of data. For
-    graphs with large diameter at 100 TB scale use
-    ``connected_components_star`` (O(log n) rounds); near-dup graphs never
-    need it.
+    Returns (node, component) where component is the minimum node id
+    reachable from `node`. Only nodes that appear in `pairs` are returned
+    (isolated docs are their own trivial component — callers left-join).
+
+    One collect of at most ``tuning.CC_DRIVER_MAX_PAIRS`` + 1 pairs picks
+    the engine. At or under the bound (every near-dup graph the registered
+    queries build: pairs that survived a similarity threshold are orders
+    of magnitude fewer than the documents), union-find finishes on the
+    driver: no rounds, so a 10k-node chain costs what a clique costs and
+    ``max_iterations`` never binds; the result is a local relation with no
+    cache behind it. Above the bound, the distributed min-label loop
+    (``_label_propagation``) runs, and raises RuntimeError if it exhausts
+    max_iterations (silently returning half-propagated labels would
+    corrupt clusters).
+
+    Cache contract: a label-loop result is BACKED by the final round's
+    truncated-lineage checkpoint blocks, tagged for
+    ``cacheutil.release_cache``. Releasing frees those blocks and the
+    frame cannot be recomputed afterwards — call release only once every
+    consumer has materialized what it needs.
+    """
+    import pyarrow as pa
+
+    from gmall_flink_yb_spark import tuning as _tuning
+
+    # persist FIRST: if the bounded collect below overflows, the label
+    # loop reads the pairs again, and without this the entire upstream
+    # pair-generation pipeline executes twice (measured 12s of a 19s run
+    # at sf0.1)
+    edges_in = pairs.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    bound = _tuning.CC_DRIVER_MAX_PAIRS
+    try:
+        # one action both sizes the graph and, when it fits, carries it
+        # (a count first adds two jobs under AQE), and at most bound + 1
+        # pairs ever reach the driver. Arrow both ways: a columnar
+        # collect, and a result frame the JVM reads without a Python
+        # worker.
+        cols = edges_in.limit(bound + 1).toArrow()
+        if cols.num_rows <= bound:
+            comp = _union_find_components(
+                cols.column("src").to_pylist(), cols.column("dst").to_pylist()
+            )
+            return pairs.sparkSession.createDataFrame(
+                pa.table(
+                    [list(comp), list(comp.values())],
+                    schema=pa.schema(
+                        [("node", pa.int64()), ("component", pa.int64())]
+                    ),
+                )
+            )
+        return _label_propagation(edges_in, edges_in.count(), max_iterations)
+    finally:
+        edges_in.unpersist()
+        # both engines consumed the pairs eagerly (collected, or persisted
+        # and lineage-truncated by the loop), so any caches a builder
+        # tagged on them (e.g. jaccard_prefix_pairs' shingle frame) are
+        # dead weight now — release here instead of relying on callers to
+        # carry the tag through their own derivations
+        release_cache(pairs)
+
+
+def _union_find_components(src: list, dst: list) -> dict:
+    """{node: minimum id of its connected set} for every node of the edge
+    list ``zip(src, dst)``. Linking the larger root under the smaller
+    keeps every root its set's minimum; path halving keeps finds short on
+    long chains."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(src, dst):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _label_propagation(
+    pairs: DataFrame, n_pairs: int, max_iterations: int
+) -> DataFrame:
+    """``connected_components``' distributed engine over a persisted
+    (src, dst) frame of ``n_pairs`` rows: every node starts labeled with
+    itself; each round every node adopts the minimum label in its closed
+    neighborhood; stop when no label changes. Rounds = graph diameter.
+    Each round is exactly TWO shuffles — one partition-aligned join (edge
+    contributions) and one groupBy (min over the closed neighborhood, with
+    each node's own label carried through the same aggregate so no
+    join-back is needed) — and ONE action: the convergence counter is a
+    sum(_changed) aggregate over the same persisted frame that carries the
+    next round's labels, so the action both materializes every partition
+    of the cache (keeping recompute lineage O(1) deep) and answers
+    "converged?" — no separate probe job, no collect of data.
 
     The loop runs in a PRIVATE session (``_enter_loop_session``) with AQE
     off: adaptive planning adds one re-optimization round-trip per shuffle
@@ -1215,65 +1310,37 @@ def connected_components(
     a durable ``checkpoint`` when the context has a checkpoint dir (so an
     executor loss mid-loop doesn't kill the job on a real cluster), else
     ``localCheckpoint`` — see ``_truncate_lineage``.
-
-    Raises RuntimeError if max_iterations is exhausted before convergence
-    (silently returning half-propagated labels would corrupt clusters).
-
-    Returns (node, component) where component is the minimum node id
-    reachable from `node`. Only nodes that appear in `pairs` are returned
-    (isolated docs are their own trivial component — callers left-join).
-
-    Cache contract (ADVICE r5): the result is BACKED by the final round's
-    truncated-lineage checkpoint blocks, tagged for
-    ``cacheutil.release_cache``. Releasing frees those blocks and the
-    frame cannot be recomputed afterwards — call release only once every
-    consumer has materialized what it needs.
     """
-    # persist pairs FIRST: the symmetrize-union reads it twice, and without
-    # this the entire upstream pair-generation pipeline executes twice
-    # (measured 12s of a 19s run at sf0.1)
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     caller = pairs.sparkSession
-    loop, lpairs, in_view = _enter_loop_session(pairs, "cc")
+    lpairs, in_view = _enter_loop_session(pairs)
     edges = None
     edges_by_dst = None
     # each round's localCheckpoint handle is tracked EXPLICITLY off its
-    # own plan (ADVICE r5, medium: a context-wide pinned-RDD diff would
-    # tag — and later force-unpersist — frames persisted concurrently by
-    # other queries on the shared context). The previous round's blocks
-    # are freed as soon as the next round is materialized, so loop block
-    # memory is O(1) rounds, and only the FINAL round's handle survives,
-    # tagged on the result for cacheutil.release_cache. NOTE: the result
-    # is backed by those truncated-lineage blocks, so release_cache makes
-    # it permanently unusable — release only after consumers are done.
+    # own plan (a context-wide pinned-RDD diff would tag — and later
+    # force-unpersist — frames persisted concurrently by other queries on
+    # the shared context). The previous round's blocks are freed as soon
+    # as the next round is materialized, so loop block memory is O(1)
+    # rounds, and only the FINAL round's handle survives, tagged on the
+    # result for cacheutil.release_cache.
     cur_handle = None
     try:
         edges = (
-            lpairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-            .union(
+            lpairs.union(
                 lpairs.select(
-                    F.col(id_b).alias("src"), F.col(id_a).alias("dst")
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
                 )
             )
             .distinct()
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_edges = edges.count()
-        if n_edges == 0:
-            # legitimate zero-duplicates corpus: no nodes, nothing to
-            # propagate (without this, sum(_changed) over zero rows is
-            # NULL and the loop would spin to max_iterations then raise)
-            return _exit_loop_session(
-                loop.createDataFrame([], "node long, component long"), caller
-            )
         # Size the loop's partitioning to the SUBGRAPH, not the corpus: the
         # near-dup graph is orders of magnitude smaller than the input
         # (pairs survived a similarity threshold), so the session-wide
         # shuffle parallelism would spend each round on empty-task
-        # overhead. ~1M edges per partition; at 1B edges this is still
-        # 1000-way parallel. Both frames hash on the join key, so each
-        # round's join adds no exchange.
-        n_parts = max(1, min(n_edges // 1_000_000 + 1, 4096))
+        # overhead. ~1M edges (at most 2 per pair) per partition; at 1B
+        # edges this is still 1000-way parallel. Both frames hash on the
+        # join key, so each round's join adds no exchange.
+        n_parts = max(1, min(2 * n_pairs // 1_000_000 + 1, 4096))
         edges_by_dst = edges.repartition(n_parts, "dst").persist(
             StorageLevel.MEMORY_AND_DISK
         )
@@ -1284,7 +1351,6 @@ def connected_components(
             .repartition(n_parts, "node")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        converged = False
         for _ in range(max_iterations):
             # neighbor contributions (own=null) unioned with each node's
             # self-contribution (own=label): one groupBy yields both the new
@@ -1315,7 +1381,8 @@ def connected_components(
             )
             # lazy: the convergence agg below touches every partition, so
             # it materializes + truncates this round in the SAME job —
-            # one driver round-trip per round instead of two
+            # one driver round-trip per round instead of two. sum() over
+            # zero rows (an empty graph) is NULL, read as 0 changes.
             new_labels, new_handle = _truncate_lineage(new_labels, eager=False)
             changed = (
                 new_labels.agg(
@@ -1330,8 +1397,20 @@ def connected_components(
             if old_handle is not None:
                 old_handle.unpersist()  # previous round's checkpoint blocks
             if changed == 0:
-                converged = True
                 break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iterations} "
+                "iterations; raise max_iterations (rounds needed = graph "
+                "diameter)"
+            )
+        return owns_cache(
+            _exit_loop_session(
+                labels.select("node", F.col("label").alias("component")),
+                caller,
+            ),
+            *([cur_handle] if cur_handle is not None else []),
+        )
     except BaseException:
         if cur_handle is not None:
             cur_handle.unpersist()
@@ -1341,27 +1420,7 @@ def connected_components(
             edges_by_dst.unpersist()
         if edges is not None:
             edges.unpersist()
-        pairs.unpersist()
-        # the label loop consumed `pairs` eagerly (edges are persisted and
-        # lineage-truncated above), so any caches a builder tagged on it
-        # (e.g. jaccard_prefix_pairs' shingle frame) are dead weight now —
-        # release here instead of relying on callers to carry the tag
-        # through their own derivations (ADVICE r4)
-        release_cache(pairs)
         caller.catalog.dropGlobalTempView(in_view)
-    if not converged:
-        if cur_handle is not None:
-            cur_handle.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations; raise max_iterations (rounds needed = graph diameter)"
-        )
-    return owns_cache(
-        _exit_loop_session(
-            labels.select("node", F.col("label").alias("component")), caller
-        ),
-        *( [cur_handle] if cur_handle is not None else [] ),
-    )
 
 
 def select_canonical(
@@ -1376,10 +1435,9 @@ def select_canonical(
     convention skips: curation keeps the BEST representative (longest text,
     highest quality score), not an arbitrary one.
 
-    ``components`` is (node, component) from ``connected_components`` /
-    ``connected_components_star``; docs absent from it are their own
-    singleton cluster and always kept. Returns every input doc as
-    (id_col, component, keep) with keep ∈ {0,1}.
+    ``components`` is (node, component) from ``connected_components``;
+    docs absent from it are their own singleton cluster and always kept.
+    Returns every input doc as (id_col, component, keep) with keep ∈ {0,1}.
 
     Scale: one broadcast-or-shuffle join (components is the small near-dup
     subgraph) plus one window shuffle on component — the window partitions
@@ -1404,164 +1462,6 @@ def select_canonical(
         ),
         components,  # keep the CC result's checkpoint blocks releasable
     )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the HIGH-DIAMETER scale path.
-
-    ``connected_components`` (min-label propagation) needs diameter rounds:
-    perfect for near-dup graphs (cliques, short chains), quadratic-time for
-    a 10k-long chain. The star rewrites contract ANY graph in O(log n)
-    rounds by re-wiring edges instead of flooding labels:
-    - large-star: every node's larger neighbors re-attach to the minimum of
-      its closed neighborhood;
-    - small-star: every node's smaller-or-equal neighbors (and the node)
-      re-attach to the smallest of them.
-    Both preserve connectivity; a fixed point is a forest of stars whose
-    centers are the component minima, so components read straight off the
-    final edge list. Each round is two groupBy-join phases over the CURRENT
-    edge set (which only shrinks toward star form — never grows beyond 2x
-    input), and convergence is a (count, hash-xor) signature equality — one
-    tiny aggregate per round, no driver-side data.
-
-    Same contract as ``connected_components``: returns (node, component)
-    for every node appearing in ``pairs``; raises RuntimeError if not
-    converged within ``max_iterations`` (for star rounds that means
-    ~2^max_iterations nodes — never in practice).
-    """
-    caller = pairs.sparkSession
-    _, lpairs, in_view = _enter_loop_session(pairs, "ccs")
-    # everything after the view registration lives inside try: an analysis
-    # error on a bad id column must still drop the loop-session temp view
-    # and any persists (the min-label variant has the same structure).
-    # Checkpoint handles are tracked per round off each round's own plan
-    # (see connected_components — no context-wide pinned-RDD diff).
-    e = nodes = None
-    prev_sig = None
-    converged = False
-    cur_handle = None
-    try:
-        h0 = F.greatest(F.col(id_a), F.col(id_b))
-        l0 = F.least(F.col(id_a), F.col(id_b))
-        e = (
-            lpairs.select(h0.alias("h"), l0.alias("l"))
-            .filter(F.col("h") != F.col("l"))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        nodes = (
-            e.select(F.col("h").alias("node"))
-            .union(e.select(F.col("l").alias("node")))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        cur = e
-        for _ in range(max_iterations):
-            # -- large-star: (u,v) both directions; m(u) = min(N(u) ∪ {u});
-            #    emit (v, m(u)) for v > u  (v > u >= m(u), so h=v, l=m)
-            sym = cur.select(
-                F.col("h").alias("u"), F.col("l").alias("v")
-            ).union(cur.select(F.col("l").alias("u"), F.col("h").alias("v")))
-            mins = (
-                sym.groupBy("u")
-                .agg(F.min("v").alias("mn"))
-                .select("u", F.least("mn", F.col("u")).alias("m"))
-            )
-            # duplicates between here and new_e's distinct are harmless
-            # (min is dup-insensitive), so no intermediate distinct
-            ls = (
-                sym.join(mins, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("h"), F.col("m").alias("l"))
-            )
-            # -- small-star on edges already pointing larger -> smaller:
-            #    m(h) = min of h's smaller neighbors; emit (l, m) l != m,
-            #    plus (h, m)
-            mins2 = ls.groupBy("h").agg(F.min("l").alias("mn"))
-            j = ls.join(mins2, "h")
-            # lineage truncation: an iterative DataFrame loop's logical
-            # plan otherwise grows every round and re-analysis cost
-            # dominates (the cache only short-circuits execution, not
-            # planning). Durable checkpoint when the context has a
-            # checkpoint dir (cluster), executor-local otherwise; lineage
-            # stays O(1) per round in either mode.
-            new_e, new_handle = _truncate_lineage(
-                j.where(F.col("l") != F.col("mn"))
-                .select(F.col("l").alias("h"), F.col("mn").alias("l"))
-                .union(j.select("h", F.col("mn").alias("l")))
-                .distinct(),
-                # lazy: the signature agg below materializes it in one job
-                eager=False,
-            )
-            sig_row = new_e.agg(
-                F.count(F.lit(1)).alias("n"),
-                # xor-fold: order-independent and overflow-free under ANSI
-                F.expr("bit_xor(xxhash64(h, l))").alias("s"),
-            ).collect()[0]
-            sig = (sig_row["n"], sig_row["s"])
-            if cur is not e:
-                cur.unpersist()
-            if cur_handle is not None:
-                cur_handle.unpersist()  # previous round's checkpoint blocks
-            cur = new_e
-            cur_handle = new_handle
-            if sig == prev_sig:
-                converged = True
-                break
-            prev_sig = sig
-        if not converged:
-            raise RuntimeError(
-                f"connected_components_star did not converge in "
-                f"{max_iterations} rounds"
-            )
-        # fixed point is a star forest: (h, l) == (node, component-min);
-        # centers have no outgoing edge and are their own component
-        comp = nodes.join(
-            cur.select(F.col("h").alias("node"), F.col("l").alias("c")),
-            "node",
-            "left",
-        ).select(
-            "node", F.coalesce(F.col("c"), F.col("node")).alias("component")
-        )
-        # materialize before unpersisting the lineage we built it from
-        comp = comp.persist(StorageLevel.MEMORY_AND_DISK)
-        comp.count()
-        if cur is not e:
-            cur.unpersist()
-        # keep the final round's checkpoint blocks alive and tagged: the
-        # rebound caller-session frame re-analyzes the plan through a temp
-        # view, and its execution may recompute comp's join from cur's
-        # LogicalRDD instead of hitting comp's persist — freeing the
-        # blocks here broke exactly that collect. release_cache frees
-        # both (and makes the result non-recomputable — same
-        # release-after-consumption contract as connected_components).
-        final_handle = cur_handle
-        cur_handle = None  # success: don't free in the except path
-        return owns_cache(
-            _exit_loop_session(comp, caller),
-            comp,
-            *([final_handle] if final_handle is not None else []),
-        )
-    except BaseException:
-        if cur_handle is not None:
-            cur_handle.unpersist()
-        raise
-    finally:
-        if nodes is not None:
-            nodes.unpersist()
-        if e is not None:
-            e.unpersist()
-        # pairs fully consumed by the hooking loop: release builder-tagged
-        # caches here, same contract as connected_components (ADVICE r4)
-        release_cache(pairs)
-        caller.catalog.dropGlobalTempView(in_view)
 
 
 def simhash_pairs(

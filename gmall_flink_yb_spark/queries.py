@@ -3106,11 +3106,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dedup clustering: near-dup PAIRS -> duplicate CLUSTERS via distributed
-# connected components (iterative min-label propagation; see
-# functions/dedup.connected_components). The oracle computes the same
-# components with a DuckDB recursive CTE — an iterative Spark algorithm
-# checked against declarative recursion.
+# Dedup clustering: near-dup PAIRS -> duplicate CLUSTERS via connected
+# components (functions/dedup.connected_components: driver union-find for
+# pair lists up to tuning.CC_DRIVER_MAX_PAIRS, which covers these
+# queries, distributed min-label propagation above it). The oracle
+# computes the same components with a DuckDB recursive CTE.
 # ---------------------------------------------------------------------------
 
 _CLUSTER_THRESHOLD = 0.8

@@ -88,6 +88,13 @@ VECTOR_EXPANSION = 8.0
 # compress (band indexes carrying repeated bucket/band columns), and
 # overshoot is AQE-coalesced while undershoot is the memory cliff.
 HASH_INDEX_EXPANSION = 2.0
+# largest pair list connected_components collects and finishes with
+# driver union-find instead of distributed label rounds. Sized like
+# k-means' model-state collect: at this bound a random sparse graph
+# (~0.9 nodes per pair) peaks at ~50 MB of driver Python memory and
+# ~2 s of collect + union-find + result frame (BASELINE.md); near-dup
+# graphs sit orders of magnitude below it.
+CC_DRIVER_MAX_PAIRS = 250_000
 # above-file-count threshold where per-file size stats switch to
 # parent-directory content summaries (bounds driver metadata RPCs)
 _MAX_FILE_STATS = 1024

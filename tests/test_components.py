@@ -1,10 +1,32 @@
 """Connected-components tests: chain graphs need multiple propagation
 rounds (diameter > 1), which the sf-corpus near-dup cliques never
-exercise; also verifies disjoint clusters stay disjoint."""
+exercise; also verifies disjoint clusters stay disjoint. Graphs this
+small take the driver union-find path; the ``label_propagation`` fixture
+forces the distributed min-label loop by dropping the driver bound."""
 
 from __future__ import annotations
 
+import pytest
+
+from gmall_flink_yb_spark import tuning
 from gmall_flink_yb_spark.functions.dedup import connected_components
+
+
+@pytest.fixture
+def label_propagation(monkeypatch):
+    """Send every non-empty pair list through the min-label loop."""
+    monkeypatch.setattr(tuning, "CC_DRIVER_MAX_PAIRS", 0)
+
+
+def _components(pairs, **kw) -> dict:
+    comps = connected_components(pairs, **kw).collect()
+    return {r.node: r.component for r in comps}
+
+
+def _global_temp_views(spark) -> set:
+    if not spark.catalog.databaseExists("global_temp"):
+        return set()
+    return {v.name for v in spark.catalog.listTables("global_temp")}
 
 
 def test_chain_and_disjoint_components(spark):
@@ -32,9 +54,7 @@ def test_reversed_edge_direction_irrelevant(spark):
     assert got == {1: 1, 3: 1, 5: 1}
 
 
-def test_star_matches_label_propagation(spark):
-    from gmall_flink_yb_spark.functions.dedup import connected_components_star
-
+def test_driver_path_matches_label_propagation(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [
             (1, 2), (2, 3), (3, 4), (4, 5),
@@ -44,36 +64,45 @@ def test_star_matches_label_propagation(spark):
         ],
         "id_a long, id_b long",
     )
-    lp = {r.node: r.component for r in connected_components(pairs).collect()}
-    st = {
-        r.node: r.component
-        for r in connected_components_star(pairs).collect()
-    }
-    assert st == lp
+    driver = _components(pairs)
+    monkeypatch.setattr(tuning, "CC_DRIVER_MAX_PAIRS", 0)
+    assert _components(pairs) == driver
 
 
-def test_star_handles_long_path_in_log_rounds(spark):
+def test_long_path_needs_no_round_cap(spark):
     """A 200-node path has diameter 199: min-label propagation would need
-    199 rounds (its max_iterations=50 raises — too expensive to demonstrate
-    in CI), while the star rewrites contract it within 15 — THE reason the
-    variant exists."""
-    from gmall_flink_yb_spark.functions.dedup import connected_components_star
-
+    199 rounds and raises at max_iterations=15, while the driver
+    union-find finishes it in one collect whatever the cap."""
     n = 200
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
     )
-    got = {
-        r.node: r.component
-        for r in connected_components_star(pairs, max_iterations=15).collect()
-    }
+    got = _components(pairs, max_iterations=15)
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
-def test_star_random_graph_parity(spark):
+def test_label_propagation_raises_at_round_cap(spark, label_propagation):
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, max_iterations=2)
+
+
+def test_ten_thousand_node_chain_is_one_component(spark):
+    n = 10_000
+    # shuffled edge order and ids descending along the chain: the
+    # smallest id sits at one end and every union meets it late
     from random import Random
 
-    from gmall_flink_yb_spark.functions.dedup import connected_components_star
+    edges = [(n - i, n - i - 1) for i in range(n - 1)]
+    Random(7).shuffle(edges)
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    assert _components(pairs) == {i: 1 for i in range(1, n + 1)}
+
+
+def test_random_graph_driver_matches_label_propagation(spark, monkeypatch):
+    from random import Random
 
     rng = Random(42)
     edges = [
@@ -81,40 +110,30 @@ def test_star_random_graph_parity(spark):
     ]
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    lp = {r.node: r.component for r in connected_components(pairs).collect()}
-    st = {
-        r.node: r.component
-        for r in connected_components_star(pairs).collect()
-    }
-    assert st == lp
+    driver = _components(pairs)
+    monkeypatch.setattr(tuning, "CC_DRIVER_MAX_PAIRS", 0)
+    assert _components(pairs) == driver
 
 
-def test_caller_session_aqe_untouched(spark):
-    """The CC loops disable AQE only in their private session — the
+def test_caller_session_aqe_untouched(spark, label_propagation):
+    """The label loop disables AQE only in its private session — the
     caller's conf must never flip mid-loop (shared-session safety)."""
-    from gmall_flink_yb_spark.functions.dedup import connected_components_star
-
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
     lp = connected_components(pairs)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    st = connected_components_star(pairs)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     assert {r.node: r.component for r in lp.collect()} == want
-    assert {r.node: r.component for r in st.collect()} == want
 
 
-def test_durable_checkpoint_mode(spark, tmp_path):
-    """With a reliable checkpoint dir set, both CC variants must route
+def test_durable_checkpoint_mode(spark, tmp_path, label_propagation):
+    """With a reliable checkpoint dir set, the label loop must route
     lineage truncation through df.checkpoint (files appear under the dir)
     and still produce correct components — the fault-tolerant cluster
     mode of _truncate_lineage."""
     import os
-
-    from gmall_flink_yb_spark.functions.dedup import connected_components_star
 
     sc = spark.sparkContext
     assert not sc.getCheckpointDir(), "fixture session should start bare"
@@ -125,12 +144,7 @@ def test_durable_checkpoint_mode(spark, tmp_path):
             [(1, 2), (2, 3), (3, 4), (20, 21)], "id_a long, id_b long"
         )
         want = {1: 1, 2: 1, 3: 1, 4: 1, 20: 20, 21: 20}
-        lp = {r.node: r.component for r in connected_components(pairs).collect()}
-        st = {
-            r.node: r.component
-            for r in connected_components_star(pairs).collect()
-        }
-        assert lp == want and st == want
+        assert _components(pairs) == want
         written = [
             os.path.join(root, f)
             for root, _, files in os.walk(ckpt)
@@ -168,34 +182,33 @@ def test_select_canonical_keep_best(spark):
     assert got == {1: (1, 0), 2: (1, 1), 3: (1, 0), 9: (9, 1)}
 
 
-def test_empty_pairs_returns_empty_not_nonconvergence(spark):
+def test_empty_pairs_returns_empty_not_nonconvergence(spark, monkeypatch):
     # zero-duplicates corpus: no pairs -> empty component table, NOT a
     # spurious "did not converge" (sum over zero rows is NULL, which the
-    # convergence check must treat as 0 changes)
-    from gmall_flink_yb_spark.functions.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
+    # convergence check must treat as 0 changes). A bound of -1 sends
+    # even the empty list through the label loop.
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(empty).count() == 0
-    assert connected_components_star(empty).count() == 0
+    for bound in (tuning.CC_DRIVER_MAX_PAIRS, -1):
+        monkeypatch.setattr(tuning, "CC_DRIVER_MAX_PAIRS", bound)
+        comps = connected_components(empty)
+        assert comps.count() == 0
+        assert comps.schema.simpleString() == (
+            "struct<node:bigint,component:bigint>"
+        )
 
 
-def test_star_cc_bad_column_cleans_up_loop_state(spark):
-    """An analysis error on a wrong id column must still drop the loop
-    session's temp view and persists (setup now lives inside try)."""
-    import pytest as _pytest
-
-    from gmall_flink_yb_spark.functions.dedup import connected_components_star
-
+def test_bad_column_cleans_up_loop_state(spark, monkeypatch):
+    """An analysis error on a wrong id column must leave no loop-session
+    temp view and no persisted frame behind, on either engine."""
     pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    before = {
-        v.name for v in spark.catalog.listTables("global_temp")
-    } if spark.catalog.databaseExists("global_temp") else set()
-    with _pytest.raises(Exception):
-        connected_components_star(pairs, id_a="no_such_col", id_b="id_b")
-    after = {
-        v.name for v in spark.catalog.listTables("global_temp")
-    } if spark.catalog.databaseExists("global_temp") else set()
-    assert after <= before  # no leaked _loop_ccs_* views
+    views = _global_temp_views(spark)
+    def cached() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = cached()
+    for bound in (tuning.CC_DRIVER_MAX_PAIRS, 0):
+        monkeypatch.setattr(tuning, "CC_DRIVER_MAX_PAIRS", bound)
+        with pytest.raises(Exception):
+            connected_components(pairs, id_a="no_such_col", id_b="id_b")
+        assert _global_temp_views(spark) <= views  # no leaked _loop_* view
+        assert cached() <= before

@@ -183,6 +183,42 @@ def test_jaccard_prefix_cap_gated_at_plan_time(spark):
     )
 
 
+def test_jaccard_prefix_joins_probe_thread_on_error(spark, monkeypatch):
+    """If candidate-plan building raises, the mega-doc length probe's
+    thread (and the Spark job it runs) must be joined before the error
+    reaches the caller, not left running."""
+    import threading
+    import time
+
+    from gmall_flink_yb_spark.functions import dedup
+
+    @F.udf("string")
+    def slow_text(i):
+        time.sleep(0.5)  # keeps the probe job running past plan building
+        return f"doc {i}"
+
+    docs = spark.range(4).select(
+        F.col("id").alias("doc_id"), slow_text("id").alias("text")
+    )
+    probes = []
+
+    def failing_candidates(toks, threshold):
+        probes.extend(
+            t for t in threading.enumerate() if "_probe_max_len" in t.name
+        )
+        raise RuntimeError("candidate plan failed")
+
+    monkeypatch.setattr(
+        dedup, "_jaccard_prefix_candidates", failing_candidates
+    )
+    with pytest.raises(RuntimeError, match="candidate plan failed"):
+        dedup.jaccard_prefix_pairs(
+            docs, "doc_id", "text", auto_partitions=False
+        )
+    assert probes, "the probe thread was not running during plan building"
+    assert not any(t.is_alive() for t in probes)
+
+
 def test_minhash_lsh_finds_near_dup(docs):
     pairs = {(r["id_a"], r["id_b"]): r["est_jaccard"]
              for r in minhash_lsh_pairs(docs, "doc_id", "text",

@@ -12,6 +12,7 @@ the arms instead of concentrating it in one query's samples.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -27,16 +28,14 @@ from gmall_flink_yb_spark.session import get_spark
 
 
 def main() -> None:
-    names = sys.argv[1].split(",")
-    runs = 5
-    for i, a in enumerate(sys.argv[2:], start=2):
-        if a == "--runs":
-            runs = int(sys.argv[i + 1])
-        elif a.startswith("--runs="):
-            runs = int(a.split("=", 1)[1])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", help="comma-separated registered query names")
+    ap.add_argument("--runs", type=int, default=5, help="repeats per query")
+    args = ap.parse_args()
+    names = [n for n in args.queries.split(",") if n]
     unknown = [n for n in names if n not in QUERIES]
-    if unknown:
-        raise SystemExit(f"unknown queries: {unknown}")
+    if unknown or not names:
+        ap.error(f"unknown queries: {unknown}" if unknown else "no queries")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
         "measure", extra_conf={"spark.ui.showConsoleProgress": "false"}
@@ -51,7 +50,7 @@ def main() -> None:
     ).save()
     pre = tide_probe()
     samples: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(runs):
+    for _ in range(args.runs):
         for n in names:
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"measure:{n}")
