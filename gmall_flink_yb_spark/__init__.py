@@ -5,6 +5,8 @@ and data-processing capabilities of the reference repo yebo001/gmall-flink-yb
 Layout
 ------
 - ``session``    : SparkSession factory tuned for scale (AQE, shuffle sizing).
+- ``worker_daemon``: Python worker daemon that local sessions start (no
+                   per-task re-read of pyspark.zip's directory).
 - ``schemas``    : explicit StructType constants for every record shape.
 - ``sources``    : batch + streaming readers (parquet/JSON/Kafka/CDC envelope).
 - ``operators``  : the reference's operator inventory (SURVEY.md §2) as pure

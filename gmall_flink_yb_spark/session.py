@@ -7,13 +7,27 @@ coalescing + skew-join splitting replaces the reference's hand-tuned
 parallelism), broadcast threshold generous enough that every gmall dim table
 (user/province/sku/spu/trademark/category3 — all small) broadcasts, and Arrow
 enabled so any Pandas-UDF fallback is batch-vectorized.
+
+Local sessions (``local[...]`` masters) start their Python workers from
+``worker_daemon`` instead of ``pyspark.daemon``: on CPython < 3.12 it stops
+each task from re-reading ``pyspark.zip``'s directory once per cached zip
+importer (BASELINE.md "Python worker set-up"), which every Python task of
+the stateful and CDC-routing streams and every Python-UDF query paid. The
+package's parent directory is prepended to the workers' PYTHONPATH so the
+daemon module imports; ``worker_daemon_conf`` makes that decision. Other
+masters keep Spark's daemon, since executors there may not have the package
+on their path when the daemon starts.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from gmall_flink_yb_spark import worker_daemon
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -40,6 +54,41 @@ STATE_STORE_PROVIDERS = {
 }
 
 
+EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = str(Path(__file__).resolve().parents[1])
+
+
+def resolve_master(
+    master: str | None, environ: Mapping[str, str] = os.environ
+) -> str | None:
+    """The master ``get_spark`` sets: ``master`` if given, else
+    ``local[SPARK_GRAFT_CPUS]`` unless ``SPARK_MASTER`` leaves the choice
+    to the submitter (``None``)."""
+    if master is not None:
+        return master
+    if environ.get("SPARK_MASTER"):
+        return None
+    return f"local[{environ.get('SPARK_GRAFT_CPUS', '32')}]"
+
+
+def worker_daemon_conf(
+    master: str | None, extra_conf: Mapping[str, str] | None = None
+) -> dict[str, str]:
+    """``extra_conf`` plus, for a ``local[...]`` master (as resolved by
+    ``resolve_master``), the confs that start Python workers from
+    ``worker_daemon``: the daemon module (unless the caller names one), and
+    the package's parent directory prepended to any caller-supplied
+    ``spark.executorEnv.PYTHONPATH``."""
+    conf = dict(extra_conf or {})
+    if master is None or not (master == "local" or master.startswith("local[")):
+        return conf
+    conf.setdefault("spark.python.daemon.module", worker_daemon.__name__)
+    conf[EXECUTOR_PYTHONPATH] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get(EXECUTOR_PYTHONPATH)) if p
+    )
+    return conf
+
+
 def get_spark(
     app_name: str = "gmall_flink_yb_spark",
     master: str | None = None,
@@ -52,9 +101,9 @@ def get_spark(
     On a real cluster, drop ``master`` and let the submitter decide; the conf
     below is sized so the same logical plans survive a 100x scale-up:
     AQE re-sizes shuffles at runtime, skewed keys are split, and small dims
-    are broadcast instead of shuffled.
+    are broadcast instead of shuffled. A ``local[...]`` master also gets
+    the ``worker_daemon_conf`` Python worker daemon.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -91,13 +140,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    master = resolve_master(master)
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in worker_daemon_conf(master, extra_conf).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # record the session's pre-ratchet shuffle parallelism so the
     # auto-sizing hooks floor against the BASE, not the live value

@@ -556,6 +556,9 @@ def start_cdc_routing(
     Spark catalog on first sight (K4 dynamic DDL, TableProcessFunction.java:
     116-176 — the reference runs checkTable per new broadcast-config row;
     the seen-set mirrors "new row", CREATE IF NOT EXISTS makes replays safe).
+    ``config_loader``'s frame is persisted for the batch and unpersisted at
+    its end, so it is evaluated once and every write of the batch routes
+    with that one config version.
 
     Exactly-once intent: the checkpoint makes batch replay deterministic and
     the writes are batchId-keyed (kafka payload partition dir) or idempotent
@@ -566,27 +569,31 @@ def start_cdc_routing(
     ddl_seen: set[str] = set()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cfg = config_loader()  # latest config wins, per batch (ST4)
-        if catalog_db is not None:
-            # config is broadcast-small by design; collecting it is the same
-            # driver-side footprint as the broadcast join in route_cdc
-            for row in (
-                cfg.filter(F.col("sinkType") == "hbase")
-                .select("sinkTable", "sinkColumns", "sinkPk", "sinkExtend")
-                .collect()
-            ):
-                if row["sinkTable"] not in ddl_seen:
-                    ensure_sink_table(
-                        spark,
-                        row["sinkTable"],
-                        row["sinkColumns"],
-                        row["sinkPk"],
-                        row["sinkExtend"],
-                        database=catalog_db,
-                    )
-                    ddl_seen.add(row["sinkTable"])
+        # latest config wins, per batch (ST4): the persisted frame is the
+        # batch's one snapshot, so the DDL, kafka and dim sides below all
+        # route with the same config version
+        cfg = config_loader().persist()
         batch_df.persist()
         try:
+            if catalog_db is not None:
+                # config is broadcast-small by design; collecting it is the
+                # same driver-side footprint as the broadcast join in
+                # route_cdc
+                for row in (
+                    cfg.filter(F.col("sinkType") == "hbase")
+                    .select("sinkTable", "sinkColumns", "sinkPk", "sinkExtend")
+                    .collect()
+                ):
+                    if row["sinkTable"] not in ddl_seen:
+                        ensure_sink_table(
+                            spark,
+                            row["sinkTable"],
+                            row["sinkColumns"],
+                            row["sinkPk"],
+                            row["sinkExtend"],
+                            database=catalog_db,
+                        )
+                        ddl_seen.add(row["sinkTable"])
             routed = route_cdc(batch_df, cfg)
             # batchId-keyed partition dir + overwrite => replay-idempotent
             # (append would duplicate rows if a crash interrupts the batch
@@ -613,6 +620,7 @@ def start_cdc_routing(
             hbase.unpersist()
         finally:
             batch_df.unpersist()
+            cfg.unpersist()
 
     return (
         envelope_stream.writeStream.foreachBatch(write_batch)

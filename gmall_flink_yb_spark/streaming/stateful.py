@@ -22,6 +22,13 @@ Batch wall-clock is LINEAR in distinct keys (one Python call per key per
 micro-batch — the applyInPandasWithState group protocol is the floor), so
 at 10M+ active keys the lever is executor count, or the batch forms in
 operators/visitor which run as plain aggregates.
+
+At the small per-batch key counts of a real-time replay the floor was
+elsewhere: Spark's per-TASK Python worker set-up re-read pyspark.zip's
+directory once per cached zip importer (a median 0.17 CPU-s a task on
+CPython 3.11), a larger floor than the group protocol. Local sessions
+start workers from ``worker_daemon``, which skips those re-reads
+(BASELINE.md "Python worker set-up").
 """
 
 from __future__ import annotations

@@ -579,6 +579,64 @@ def test_cdc_routing_stream_refreshes_config(spark, tmp_path):
     ).count() == 1
 
 
+def test_cdc_routing_evaluates_config_once_per_batch(spark, tmp_path):
+    """ST4 'latest config wins, per batch': the kafka write and the dim side
+    of one micro-batch route with ONE config snapshot, so the loader's frame
+    is evaluated once per batch, not once per action."""
+    env_rows = [
+        Row(database="gmall", tableName="order_info",
+            before=None, after={"id": "1", "amount": "10"}, type="insert"),
+        Row(database="gmall", tableName="user_info",
+            before=None, after={"id": "7", "name": "ann"}, type="insert"),
+    ]
+    src = str(tmp_path / "cdc_src")
+    os.makedirs(src)
+    spark.createDataFrame(env_rows, CDC_ENVELOPE_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(tmp_path / "stage"))
+    part = [
+        f for f in os.listdir(tmp_path / "stage") if f.endswith(".parquet")
+    ]
+    os.rename(tmp_path / "stage" / part[0], os.path.join(src, "00.parquet"))
+
+    cfg_rows = [
+        Row(sourceTable="order_info", operateType="insert", sinkType="kafka",
+            sinkTable="dwd_order_info", sinkColumns="id,amount",
+            sinkPk="id", sinkExtend=None),
+        Row(sourceTable="user_info", operateType="insert", sinkType="hbase",
+            sinkTable="dim_user_info", sinkColumns="id,name",
+            sinkPk="id", sinkExtend=None),
+    ]
+    row_evals = spark.sparkContext.accumulator(0)
+
+    def count_row(v):
+        row_evals.add(1)
+        return v
+
+    # nondeterministic: keeps the routing filters from being pushed below
+    # the UDF, so every evaluation of the frame counts every row
+    counted = F.udf(count_row, StringType()).asNondeterministic()
+    cfg = spark.createDataFrame(cfg_rows, TABLE_PROCESS_SCHEMA).withColumn(
+        "sinkTable", counted("sinkTable")
+    )
+
+    stream = read_file_stream(
+        spark, src, CDC_ENVELOPE_SCHEMA, glob="*.parquet"
+    )
+    out = str(tmp_path / "routed")
+    q = start_cdc_routing(stream, lambda: cfg, out, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    from gmall_flink_yb_spark.streaming.pipelines import read_dim_parquet
+
+    assert spark.read.parquet(os.path.join(out, "kafka_out")).count() == 1
+    assert read_dim_parquet(
+        spark, os.path.join(out, "dim_dim_user_info")
+    ).count() == 1
+    assert row_evals.value / len(cfg_rows) == 1
+
+
 def test_ensure_sink_table_catalog_ddl(spark):
     """K4 dynamic DDL (TableProcessFunction.java:116-176): a config row
     creates a catalog table with sinkColumns in CSV order, pk default 'id'

@@ -505,3 +505,28 @@ def test_spread_file_scan_gates_and_identity(spark, tmp_path):
     assert tuning.spread_file_scan(repart) is repart
     projected = bdf.select("id", F.col("txt").alias("t")).filter("id > 10")
     assert tuning._scan_only_plan(projected)
+
+
+def test_scan_only_plan_compares_whole_node_names(spark, tmp_path):
+    """The spread gate walks the analyzed plan tree and compares each
+    nodeName against an exact set: a local relation (inline VALUES) is a
+    bare scan, a Generate over it or over a file scan is not."""
+    import pyspark.sql.functions as F
+
+    from gmall_flink_yb_spark import tuning
+
+    values = spark.sql("SELECT * FROM VALUES (1, 'a'), (2, 'b') AS t(a, b)")
+    assert tuning._scan_only_plan(values)
+    assert tuning._scan_only_plan(values.filter("a > 1").select("b"))
+    assert tuning.spread_file_scan(values) is values  # no files: no-op
+    assert not tuning._scan_only_plan(
+        values.select(F.explode(F.array("a", "a")).alias("x"))
+    )
+
+    path = str(tmp_path / "rows.parquet")
+    spark.range(10).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert tuning._scan_only_plan(scan)
+    exploded = scan.select(F.explode(F.array("id", "id")).alias("x"))
+    assert not tuning._scan_only_plan(exploded)
+    assert tuning.spread_file_scan(exploded) is exploded
